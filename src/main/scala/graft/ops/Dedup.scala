@@ -1,10 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Deduplication operators (SURVEY §2 D1/D2), each designed as shuffle-native
   * DataFrame transforms with no driver-side materialization:
@@ -13,7 +15,8 @@ import org.apache.spark.storage.StorageLevel
   *   - n-gram Jaccard: token-postings self-join — the classic inverted-index
   *     pair generation; skew-guarded by a document-frequency cap;
   *   - MinHash-LSH: signature → banded bucket join → verified candidates →
-  *     iterative connected components (no collect);
+  *     connected components (no collect): union-find in one task when the
+  *     edges fit one partition, else min-label propagation to convergence;
   *   - SimHash: 60-bit md5-derived signature, oracle-checkable.
   */
 object Dedup {
@@ -628,19 +631,6 @@ object Dedup {
        |QUALIFY ROW_NUMBER() OVER (PARTITION BY comp ORDER BY n_tokens DESC, doc) = 1
        |ORDER BY comp""".stripMargin
 
-  /** Connected components over dup pairs by iterative min-label propagation —
-    * converges in O(log(diameter)) joins, all distributed (no driver graph).
-    * Returns (doc, component) where component = min doc id in the cluster.
-    *
-    * Checkpointing each iteration truncates lineage so iteration i does not
-    * re-execute the (potentially huge) pair-generation plan i times.
-    * `reliableCheckpoint = true` writes iterations to the SparkContext's
-    * checkpoint directory instead of executor block storage: on a long
-    * many-iteration run over 100 TB, an executor loss then replays from the
-    * last checkpoint file rather than recomputing the whole label chain
-    * (localCheckpoint blocks die with their executor). Requires
-    * `sc.setCheckpointDir` on a fault-tolerant FS.
-    */
   /** Reliable-checkpoint dir of a checkpointed frame (None for local
     * checkpoints — Spark only reports files for reliable ones).
     */
@@ -651,8 +641,8 @@ object Dedup {
 
   /** Delete a superseded reliable checkpoint. Spark never cleans these by
     * default (spark.cleaner.referenceTracking.cleanCheckpoints=false), so a
-    * maxIter-deep label chain would otherwise leave maxIter full copies of
-    * the label table on the checkpoint FS — the GraphX Pregel pattern is to
+    * deep label chain would otherwise leave one full copy of the label table
+    * per iteration on the checkpoint FS — the GraphX Pregel pattern is to
     * drop iteration i-1 once iteration i is materialized.
     */
   private def dropCheckpoint(df: DataFrame): Unit =
@@ -669,12 +659,50 @@ object Dedup {
     * overhead at stress scale (measured r16: 11,367 tasks, most < 1 MB).
     * The width is derived from the measured edge count each run (scale-
     * adaptive, guide §2.2: fewer, larger partitions), clamped to the session
-    * width so a genuinely huge edge set still gets the full fan-out.
+    * width so a genuinely huge edge set still gets the full fan-out. An edge
+    * set that fits ONE such partition skips the loop altogether (union-find
+    * in one task), so `spark.graft.cc.rowsPerPartition` is also the ceiling
+    * on the edges that one task holds in memory.
     */
   private val CcRowsPerPartitionDefault = 2000000L
 
-  def duplicateClusters(pairs: DataFrame, maxIter: Int = 10,
-                        reliableCheckpoint: Boolean = false): DataFrame = {
+  /** Connected components over dup pairs (`d1`, `d2`). Returns (doc, comp),
+    * one row per id that appears in a pair, where comp = the minimum doc id
+    * of its component; a null id joins nothing and appears once as
+    * (null, null). Nothing is collected to the driver on either path.
+    *
+    * The symmetric edge table (both directions of every pair) is
+    * checkpointed and counted first; `spark.graft.cc.rowsPerPartition`
+    * (edges per loop partition, default 2M) then picks the path:
+    *   - at most one partition of edges: union-find over the edges in ONE
+    *     executor task — a few Spark jobs in all, where the loop runs two
+    *     per iteration and those jobs' fixed cost is nearly all of a small
+    *     graph's time. The key thus also bounds that task's memory (three
+    *     primitive long arrays over the edges): raising it for wider loop
+    *     partitions also raises what one task must hold;
+    *   - more: distributed min-label propagation. A label moves one hop per
+    *     iteration, so the loop runs O(diameter) iterations — diameter + 1
+    *     with the final one that sees no change — and stops only when the
+    *     label sum stops changing. Labels only decrease over a finite id
+    *     set, so it always terminates, and never returns moving labels.
+    *
+    * The 2M crossover is not a measured one: it is the loop's partition
+    * size (~50 MB), not the point above which the loop beats one task, and
+    * no benchmark workload reaches the loop (the largest measured edge set,
+    * 67k at 700× stress, takes union-find).
+    *
+    * Checkpointing each iteration truncates lineage so iteration i does not
+    * re-execute the (potentially huge) pair-generation plan i times.
+    * `reliableCheckpoint = true` writes the edges, every iteration and the
+    * union-find result to the SparkContext's checkpoint directory instead of
+    * executor block storage: on a long many-iteration run over 100 TB, an
+    * executor loss then replays from the last checkpoint file rather than
+    * recomputing the whole label chain (localCheckpoint blocks die with
+    * their executor). Superseded checkpoint files are deleted; only the
+    * returned frame's remains. Requires `sc.setCheckpointDir` on a
+    * fault-tolerant FS.
+    */
+  def duplicateClusters(pairs: DataFrame, reliableCheckpoint: Boolean = false): DataFrame = {
     val ck: DataFrame => DataFrame =
       if (reliableCheckpoint) df => df.checkpoint(eager = true)
       else df => df.localCheckpoint(true, ckptLevel(df))
@@ -682,12 +710,25 @@ object Dedup {
     val edges0 = ck(pairs
       .select(col("d1").as("a"), col("d2").as("b"))
       .union(pairs.select(col("d2").as("a"), col("d1").as("b"))))
-    // edge count is in hand anyway (the checkpoint is eager); derive the
-    // iteration shuffle width from it instead of the session conf, which is
-    // sized for the corpus-volume pair generation, not this loop
+    // edge count is in hand anyway (the checkpoint is eager); it picks the
+    // path and, for the loop, the iteration shuffle width instead of the
+    // session conf, which is sized for the corpus-volume pair generation
     val nEdges = edges0.count()
     val rowsPerPart = spark.conf
       .get("spark.graft.cc.rowsPerPartition", CcRowsPerPartitionDefault.toString).toLong
+    if (nEdges <= rowsPerPart) {
+      val comps = ck(UnionFind.components(edges0))
+      dropCheckpoint(edges0)
+      comps
+    } else propagateLabels(edges0, nEdges, rowsPerPart, ck)
+  }
+
+  /** [[duplicateClusters]]' distributed path: min-label propagation to
+    * convergence over the checkpointed symmetric edge table `edges0`.
+    */
+  private def propagateLabels(edges0: DataFrame, nEdges: Long, rowsPerPart: Long,
+                              ck: DataFrame => DataFrame): DataFrame = {
+    val spark = edges0.sparkSession
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // floor at the core count (clamped to the session width): a tiny edge
     // set must not serialize the iterations onto one core — measured at 700×
@@ -722,41 +763,96 @@ object Dedup {
       .repartition(parts, col("doc"))
       .distinct()
       .withColumn("comp", col("doc")))
-    var i = 0
     var converged = false
     // labels are monotone non-increasing per doc (least(comp, nbrMin)), so
     // the total label sum strictly decreases iff anything changed — one cheap
-    // scalar agg per iteration instead of a join-based change probe
-    var prevSum = labels.agg(sum(col("comp"))).head().getLong(0)
-    while (i < maxIter && !converged) {
+    // scalar agg per iteration instead of a join-based change probe (null
+    // ids carry a null label, which the sum skips)
+    def labelSum(df: DataFrame): Long =
+      df.agg(coalesce(sum(col("comp")), lit(0L))).head().getLong(0)
+    var prevSum = labelSum(labels)
+    while (!converged) {
       val nbrMin = edges
         .join(labels, edges("b") === labels("doc"))
         .select(edges("a").as("doc"), col("comp"))
         .repartition(parts, col("doc"))
         .groupBy(col("doc"))
         .agg(min(col("comp")).as("nbrComp"))
-      val updatedPlan = labels
+      val updated = ck(labels
         .join(nbrMin, Seq("doc"), "left")
-        .select(col("doc"), least(col("comp"), coalesce(col("nbrComp"), col("comp"))).as("comp"))
-      val updated = ck(updatedPlan)
-      // plan evidence hook: the eager checkpoint above has executed the
-      // iteration, so the (AQE-final) physical plan of one full iteration is
-      // in hand — printed once, first iteration only
-      if (i == 0 && spark.conf.get("spark.graft.cc.debugPlans", "false").toBoolean)
-        System.err.println("[cc] iteration-1 executed plan:\n" +
-          updatedPlan.queryExecution.executedPlan.toString)
-      val newSum = updated.agg(sum(col("comp"))).head().getLong(0)
+        .select(col("doc"), least(col("comp"), coalesce(col("nbrComp"), col("comp"))).as("comp")))
+      val newSum = labelSum(updated)
       converged = newSum == prevSum
       prevSum = newSum
       // iteration i is materialized — iteration i-1's reliable checkpoint
       // files are dead (no-op for local checkpoints)
       dropCheckpoint(labels)
       labels = updated
-      i += 1
     }
     // the returned frame depends only on the final labels checkpoint
     dropCheckpoint(edges)
     labels
+  }
+
+  /** [[duplicateClusters]]' one-task path: union-find over the symmetric
+    * edge table (a, b) in a single partition. Ids are read into a sorted,
+    * distinct primitive array, so an id's union-find slot is a binary search
+    * and slot order is id order; union by smaller root then leaves every
+    * root at its component's minimum id. Output rows and schema are those of
+    * the converged label loop.
+    */
+  private object UnionFind {
+    def components(edges: DataFrame): DataFrame = {
+      val idField = edges.schema("a")
+      val schema = StructType(Seq(idField.copy(name = "doc"), idField.copy(name = "comp")))
+      val boxId: Long => Any = idField.dataType match {
+        case LongType => identity
+        case IntegerType => _.toInt
+        case ShortType => _.toShort
+        case ByteType => _.toByte
+        case t => throw new IllegalArgumentException(s"duplicateClusters: ids must be integral, got $t")
+      }
+      edges.coalesce(1).mapPartitions(rows => solve(rows, boxId))(Encoders.row(schema))
+    }
+
+    private def solve(rows: Iterator[Row], boxId: Long => Any): Iterator[Row] = {
+      val seen = new mutable.ArrayBuilder.ofLong
+      val from = new mutable.ArrayBuilder.ofLong
+      val to = new mutable.ArrayBuilder.ofLong
+      var sawNull = false
+      // every non-null id is an `a` somewhere (the table holds both
+      // directions); a null end joins nothing, as in the loop's equi-joins
+      rows.foreach { r =>
+        if (r.isNullAt(0)) sawNull = true
+        else {
+          val a = r.get(0).asInstanceOf[Number].longValue
+          seen += a
+          if (!r.isNullAt(1)) {
+            val b = r.get(1).asInstanceOf[Number].longValue
+            if (a < b) { from += a; to += b }
+          }
+        }
+      }
+      val all = seen.result()
+      java.util.Arrays.sort(all)
+      var n = 0
+      for (k <- all.indices) if (n == 0 || all(k) != all(n - 1)) { all(n) = all(k); n += 1 }
+      val ids = java.util.Arrays.copyOf(all, n)
+      val parent = Array.range(0, n)
+      def find(x0: Int): Int = {
+        var x = x0
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
+      }
+      val (fs, ts) = (from.result(), to.result())
+      for (e <- fs.indices) {
+        val ra = find(java.util.Arrays.binarySearch(ids, fs(e)))
+        val rb = find(java.util.Arrays.binarySearch(ids, ts(e)))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      Iterator.tabulate(n)(k => Row(boxId(ids(k)), boxId(ids(find(k))))) ++
+        (if (sawNull) Iterator.single(Row(null, null)) else Iterator.empty)
+    }
   }
 
   // ---------------------------------------------------------------- SimHash

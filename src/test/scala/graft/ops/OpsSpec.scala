@@ -78,6 +78,7 @@ class OpsSpec extends AnyFunSuite {
     val comp = Dedup.duplicateClusters(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Seq(1L, 2L, 3L, 4L).map(comp) == Seq(1L, 1L, 1L, 1L))
     assert(Seq(10L, 11L).map(comp) == Seq(10L, 10L))
+    assert(Dedup.duplicateClusters(Seq.empty[(Long, Long)].toDF("d1", "d2")).isEmpty)
   }
 
   test("duplicateClusters with reliable checkpointing matches local-checkpoint result") {
@@ -102,6 +103,81 @@ class OpsSpec extends AnyFunSuite {
     }
     assert(rddDirs.nonEmpty, "reliable checkpoint must write to the checkpoint dir")
     assert(rddDirs.length == 1, s"superseded checkpoints must be deleted, found ${rddDirs.map(_.getName)}")
+  }
+
+  /** Runs `body` with the edge budget of one loop partition at 1, which
+    * sends every non-trivial edge set down the distributed label loop
+    * instead of the one-task union-find.
+    */
+  private def onLabelLoop[T](body: => T): T = {
+    spark.conf.set("spark.graft.cc.rowsPerPartition", "1")
+    try body finally spark.conf.unset("spark.graft.cc.rowsPerPartition")
+  }
+
+  private def componentMap(df: org.apache.spark.sql.DataFrame): Map[Option[Long], Option[Long]] = {
+    val rows = df.collect()
+    def id(r: org.apache.spark.sql.Row, i: Int) =
+      if (r.isNullAt(i)) None else Some(r.get(i).asInstanceOf[Number].longValue)
+    val m = rows.map(r => id(r, 0) -> id(r, 1)).toMap
+    assert(m.size == rows.length, "one row per id")
+    m
+  }
+
+  test("duplicateClusters label loop runs a 40-hop chain to convergence") {
+    import spark.implicits._
+    // a label moves one hop per iteration: the chain needs 40 changing
+    // iterations, four times the loop's former silent 10-iteration cap
+    val chain = (1L to 40L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val comp = onLabelLoop(componentMap(Dedup.duplicateClusters(chain)))
+    assert(comp == (1L to 41L).map(i => Some(i) -> Some(1L)).toMap)
+  }
+
+  /** Seeded pair set with every shape the two component paths must agree
+    * on: random pairs with repeats, both directions and self-pairs, a star,
+    * a 15-hop chain over shuffled ids, and null ids on either side.
+    */
+  private def randomPairs(seed: Int): Seq[(Option[Long], Option[Long])] = {
+    val rnd = new scala.util.Random(seed)
+    val random = Seq.fill(40)((1L + rnd.nextInt(60), 1L + rnd.nextInt(60)))
+    val repeats = Seq.fill(10)(random(rnd.nextInt(random.length)))
+    val reversed = random.take(8).map(_.swap)
+    val selfs = Seq((7L, 7L), (500L, 500L))
+    val star = (1 to 8).map(k => (300L, 300L + k))
+    val chainIds = rnd.shuffle((100L to 115L).toList)
+    val chain = chainIds.zip(chainIds.tail)
+    val known = (random ++ repeats ++ reversed ++ selfs ++ star ++ chain).map { case (a, b) => (Option(a), Option(b)) }
+    rnd.shuffle(known ++ Seq((None, Some(3L)), (Some(400L), None), (None, None)))
+  }
+
+  test("duplicateClusters: union-find and label-loop paths return identical components") {
+    import spark.implicits._
+    def rddDirs(root: String): Seq[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) :+ f else Seq(f)
+      walk(new java.io.File(root)).filter(f => f.isDirectory && f.getName.startsWith("rdd-")).map(_.getName)
+    }
+    for (seed <- Seq(1, 2); reliable <- Seq(false, true)) {
+      val typed = randomPairs(seed).toDF("d1", "d2")
+      // seed 2 runs on int ids: both paths keep the id type
+      val pairs = if (seed == 2) typed.select($"d1".cast("int").as("d1"), $"d2".cast("int").as("d2")) else typed
+      def run(path: String, clusters: => org.apache.spark.sql.DataFrame) = {
+        val ckDir = java.nio.file.Files.createTempDirectory("ccdiff").toString
+        spark.sparkContext.setCheckpointDir(ckDir)
+        val df = clusters
+        if (reliable)
+          assert(rddDirs(ckDir).length == 1, s"$path (seed $seed): only the result checkpoint may remain")
+        df
+      }
+      val uf = run("union-find", Dedup.duplicateClusters(pairs, reliableCheckpoint = reliable))
+      val loop = run("loop", onLabelLoop(Dedup.duplicateClusters(pairs, reliableCheckpoint = reliable)))
+      assert(uf.schema == loop.schema, s"seed $seed")
+      val (ufMap, loopMap) = (componentMap(uf), componentMap(loop))
+      assert(ufMap == loopMap, s"seed $seed reliable=$reliable")
+      // spot checks against the known shapes
+      assert(ufMap(None).isEmpty && ufMap(Some(400L)) == Some(400L) && ufMap(Some(500L)) == Some(500L))
+      assert((101L to 115L).forall(i => ufMap(Some(i)) == Some(100L)))
+      assert((301L to 308L).forall(i => ufMap(Some(i)) == Some(300L)))
+    }
   }
 
   test("vec_cosine expression matches built-in computation and is codegen'd") {
